@@ -3283,6 +3283,8 @@ def synthetic_mp4_sample_table(spark, groups: int = 10) -> DataFrame:
     ON EXECUTORS (one group per ``spark.range`` partition — the
     synthetic_near_dup_video_table posture; same determinism/retry
     and no-caching contract; byte-identity pytest-pinned)."""
+    if groups < 1:
+        raise ValueError(f"groups must be >= 1, got {groups}")
 
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -3388,6 +3390,8 @@ def synthetic_near_dup_video_table(spark, groups: int = 12) -> DataFrame:
     invocation — nothing is cached or staged across runs; rows are
     byte-identical to the driver form (pytest-pinned), and the
     generator is deterministic per group id, so task retries are safe."""
+    if groups < 1:
+        raise ValueError(f"groups must be >= 1, got {groups}")
 
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:

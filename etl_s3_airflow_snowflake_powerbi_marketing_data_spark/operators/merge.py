@@ -240,12 +240,13 @@ def versioned_merge(
     """Transactional MERGE without delta-spark: read the latest
     snapshot of a versioned table (sources/versioned.py), apply the
     join-based merge, commit the result as a new atomic version.
-    Returns the committed version.
+    Returns the committed version. A table with no committed version
+    is an empty target, so the first merge creates it.
 
     Same call contract as :func:`delta_merge`; the difference is the
     isolation story — here a concurrent reader keeps its resolved
     snapshot (manifests are immutable) and a concurrent writer loses
-    the O_EXCL commit race and retries, so the merge is atomic and
+    the exclusive commit race and retries, so the merge is atomic and
     isolated even on plain parquet. The data cost is the same full
     rewrite ``merge_write`` documents — the version layer adds
     atomicity, not row-level deltas; partition the table and merge
@@ -253,7 +254,7 @@ def versioned_merge(
     """
     from ..sources import versioned as vt  # noqa: PLC0415
 
-    target = vt.read_version(spark, table_path)
+    target = vt.read_latest_or_empty(spark, table_path, source.schema)
     if not update:
         # Insert-if-absent commits as an APPEND of the anti-join DELTA
         # (r12): the snapshot content is identical to rewriting

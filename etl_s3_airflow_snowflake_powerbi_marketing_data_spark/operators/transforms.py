@@ -141,11 +141,6 @@ def dedup_keep_first(
     )
 
 
-def sort_desc(df: DataFrame, column: str) -> DataFrame:
-    """P9 — global descending sort (range-partitioned exchange at scale)."""
-    return df.orderBy(F.col(column).desc())
-
-
 def parse_raw_event_time(col: Column | str) -> Column:
     """Parse the reference's RAW event_time text — ``M/D/YYYY H:MM``
     with no zero padding (`event.csv:2` ``6/26/2017 11:23``;

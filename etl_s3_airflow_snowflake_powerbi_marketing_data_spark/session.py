@@ -114,12 +114,11 @@ def get_spark(
         # re-audited, oracles green. NOT a local-only win: the planner
         # still requires the build side to fit per partition
         # (canBuildLocalHashMap gates on stats), AQE skew-split stays
-        # on, and sort-merge remains available for big-big joins. Env
-        # knob restores the Spark default per deployment.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
+        # on, and sort-merge remains available for big-big joins. A
+        # deployment restores the Spark default with
+        # get_spark(extra_conf={"spark.sql.join.preferSortMergeJoin":
+        # "true"}).
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         # The driver's testdata stores events.ts as TIMESTAMP(NANOS), which
         # Spark's parquet reader refuses; read as long and convert in
         # tables.load_table (sub-microsecond parts are zero, so lossless).

@@ -10,12 +10,14 @@ Design (the Delta/Iceberg core idea, reduced to its load-bearing part):
   rows under a fresh ``data/v{N}-{nonce}/`` prefix; nothing is ever
   rewritten or deleted in place.
 - A commit IS the atomic creation of ``_versions/{N:08d}.json`` — a
-  manifest listing the data prefixes that make up snapshot N. Creation
-  uses ``O_CREAT | O_EXCL`` (atomic on POSIX local FS and on HDFS
-  create; on S3 the equivalent is a conditional PUT), so two racing
-  writers can NOT both publish version N: the loser's exclusive create
-  fails and it retries at N+1 — optimistic concurrency, winner-decided
-  by the filesystem, no lock server.
+  manifest listing the data prefixes that make up snapshot N. The
+  manifest is written and fsynced under a temp name, then hard-linked
+  into place (``os.link`` is atomic and fails on an existing target on
+  POSIX local FS; on S3 the equivalent is a conditional PUT), so a
+  manifest is never visible half-written, and two racing writers can
+  NOT both publish version N: the loser's link fails and it retries at
+  N+1 — optimistic concurrency, winner-decided by the filesystem, no
+  lock server.
 - Readers resolve a manifest FIRST, then scan exactly its prefixes:
   a concurrent commit cannot change a running query's input set —
   snapshot isolation for free, because manifests are immutable.
@@ -83,8 +85,13 @@ def _read_manifest(path: str, version: int) -> dict:
 def _publish(path: str, manifest) -> int:
     """Atomically publish the next manifest; returns the version won.
 
-    The exclusive create is the commit point: everything before it is
-    invisible staging, everything after it is immutable history.
+    The payload is written and fsynced to a temp file first (its name
+    does not end in ``.json``, so :func:`table_versions` never sees
+    it), then hard-linked to the final name. ``os.link`` is atomic and
+    fails if the target exists, so the link is both the commit point
+    and the exclusive create: a reader sees either no manifest or a
+    complete one, and a crash before the link leaves the table at its
+    prior version.
 
     ``manifest`` is either a dict or a CALLABLE ``latest_version ->
     dict``: commits whose content depends on the current snapshot
@@ -100,15 +107,19 @@ def _publish(path: str, manifest) -> int:
         version = latest + 1
         payload = dict(manifest(latest) if callable(manifest) else manifest)
         payload["version"] = version
+        tmp = os.path.join(
+            _manifest_dir(path), f".{version:08d}-{uuid.uuid4().hex[:12]}.tmp"
+        )
+        with open(tmp, "w") as fh:
+            json.dump(payload, fh)
+            fh.flush()
+            os.fsync(fh.fileno())
         try:
-            fd = os.open(
-                _manifest_path(path, version),
-                os.O_CREAT | os.O_EXCL | os.O_WRONLY,
-            )
+            os.link(tmp, _manifest_path(path, version))
         except FileExistsError:
             continue  # lost the race for N — retry at N+1
-        with os.fdopen(fd, "w") as fh:
-            json.dump(payload, fh)
+        finally:
+            os.remove(tmp)
         return version
     raise RuntimeError(f"could not win a commit after {_MAX_COMMIT_RETRIES} tries")
 
@@ -168,6 +179,16 @@ def read_version(
     if merge_schema:
         reader = reader.option("mergeSchema", "true")
     return reader.parquet(*[os.path.join(path, p) for p in m["prefixes"]])
+
+
+def read_latest_or_empty(spark: SparkSession, path: str, schema) -> DataFrame:
+    """Latest snapshot, or an empty frame of ``schema`` when ``path``
+    has no committed version yet — the first commit to a store or
+    decisions table then reads (and merges into) an empty target
+    instead of branching on whether the table exists."""
+    if table_versions(path):
+        return read_version(spark, path)
+    return spark.createDataFrame([], schema)
 
 
 def snapshot_prefixes(path: str, version: int | None = None) -> list[str]:

@@ -63,14 +63,6 @@ def create_table_ddl(
     spark.sql(f"CREATE TABLE {name} ({schema_ddl}) USING parquet{loc}")
 
 
-def write_managed_replace(df: DataFrame, name: str) -> None:
-    """S3/S5 — full replace of a MANAGED catalog table: schema and data
-    both live behind the table name (``INSERT OVERWRITE`` semantics of
-    the reference's full-replace loads, but catalog-addressed instead
-    of path-addressed)."""
-    df.write.mode("overwrite").format("parquet").saveAsTable(name)
-
-
 def write_bucketed(
     df: DataFrame,
     table_name: str,

@@ -9,20 +9,41 @@ Local tests drive it with the parquet file source +
 ``Trigger.AvailableNow`` semantics (``processAllAvailable`` on a memory
 sink); on a cluster the source swaps to Kafka/object-store listing and
 the sink to a partitioned table — the plan in between is identical.
+Every runner here drains its query through :func:`_drain`.
+
+The streaming dedup gates (MinHash, image, video, semantic) share one
+micro-batch protocol, :func:`_run_dedup_gate`: decide the batch and pin
+the decisions, commit the decisions while the survivors are built, then
+commit the survivors to the gate's store. Every commit is an
+insert-if-absent ``versioned_merge``, so a replayed batch is
+effectively-once as long as two ordering invariants hold:
+
+- decisions before store — a store commit that landed ahead of a
+  crashed decisions commit would make the replay match its own store
+  entries and flip its keep decisions;
+- codes ⊆ vectors — the semantic gate commits a keeper's raw vector
+  before its IVF-PQ code, because the exact re-rank id-joins
+  shortlisted codes to the vectors table.
 """
 
 from __future__ import annotations
 
-from contextlib import contextmanager
+import contextlib
+import tempfile
+import time
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators.merge import versioned_merge
 from ..operators.transforms import PROPS_SCHEMA
+from ..session import inheritable
+from ..sources import versioned as vt
 
 
-@contextmanager
+@contextlib.contextmanager
 def bounded_state_partitions(spark: SparkSession, n: int):
     """Pin ``spark.sql.shuffle.partitions`` for a streaming query's
     lifetime (set BEFORE ``.start()`` — the number is baked into the
@@ -51,6 +72,52 @@ def bounded_state_partitions(spark: SparkSession, n: int):
         yield
     finally:
         spark.conf.set(key, old)
+
+
+def _drain(
+    df: DataFrame,
+    state_partitions: int | None,
+    sink,
+    checkpoint_dir: str | None = None,
+    output_mode: str = "append",
+    batch_secs: list | None = None,
+) -> DataFrame | None:
+    """Run the streaming query over everything its source holds now
+    (``processAllAvailable``), then stop it.
+
+    ``sink`` is a memory-sink query name, whose table is returned, or
+    a ``foreachBatch`` function, checkpointed at ``checkpoint_dir``
+    (a fresh temp dir when None). ``state_partitions`` pins the shuffle
+    partitions for the query's lifetime (:func:`bounded_state_partitions`);
+    None keeps the session value. When ``batch_secs`` is a list, each
+    batch function call's wall seconds are appended to it — the
+    steady-state per-micro-batch cost, apart from setup."""
+    spark = df.sparkSession
+    writer = df.writeStream.outputMode(output_mode)
+    if isinstance(sink, str):
+        writer = writer.format("memory").queryName(sink)
+    else:
+
+        def run_batch(batch: DataFrame, batch_id: int) -> None:
+            t0 = time.time()
+            sink(batch, batch_id)
+            if batch_secs is not None:
+                batch_secs.append(round(time.time() - t0, 2))
+
+        ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="stream_ckpt_")
+        writer = writer.foreachBatch(run_batch).option("checkpointLocation", ckpt)
+    with (
+        bounded_state_partitions(spark, state_partitions)
+        if state_partitions
+        else contextlib.nullcontext()
+    ):
+        q = writer.start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    return spark.table(sink) if isinstance(sink, str) else None
+
 
 # Logical schema of the event stream; the physical type of ``ts`` is
 # resolved per-source in read_event_stream (see below).
@@ -166,18 +233,7 @@ def run_stream_to_memory(
     result as a batch DataFrame from the memory sink."""
     stream = read_event_stream(spark, source_path)
     agg = streaming_event_counts(stream)
-    with bounded_state_partitions(spark, state_partitions):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table(query_name)
+    return _drain(agg, state_partitions, query_name, output_mode="complete")
 
 
 def streaming_dedup(
@@ -218,18 +274,7 @@ def run_dedup_stream_to_memory(
     deduped = streaming_dedup(doubled).select(
         "event_id", "user_id", "event_type", "value"
     )
-    with bounded_state_partitions(spark, state_partitions):
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table(query_name)
+    return _drain(deduped, state_partitions, query_name)
 
 
 def streaming_sliding_counts(
@@ -263,18 +308,7 @@ def run_sliding_to_memory(
 ) -> DataFrame:
     stream = read_event_stream(spark, source_path)
     agg = streaming_sliding_counts(stream)
-    with bounded_state_partitions(spark, state_partitions):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table(query_name)
+    return _drain(agg, state_partitions, query_name, output_mode="complete")
 
 
 def run_hll_stream_to_memory(
@@ -299,20 +333,8 @@ def run_hll_stream_to_memory(
 
     stream = read_event_stream(spark, source_path)
     regs = hll_registers(stream, "user_id", ["event_type"], p)
-    with bounded_state_partitions(spark, state_partitions):
-        q = (
-            regs.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return hll_finalize(spark.table(query_name), ["event_type"], p).orderBy(
-        "event_type"
-    )
+    registers = _drain(regs, state_partitions, query_name, output_mode="complete")
+    return hll_finalize(registers, ["event_type"], p).orderBy("event_type")
 
 
 def run_cms_stream_to_memory(
@@ -339,34 +361,19 @@ def run_cms_stream_to_memory(
 
     stream = read_event_stream(spark, source_path)
     regs = cms_registers(stream, "user_id", depth=depth, width=width)
-    with bounded_state_partitions(spark, state_partitions):
-        q = (
-            regs.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    from pyspark.sql import functions as F  # noqa: PLC0415
-
+    registers = _drain(regs, state_partitions, query_name, output_mode="complete")
     watch = (
         spark.read.parquet(source_path)
         .select("user_id")
         .filter(F.col("user_id") % 37 == 0)
     )
     return cms_point_estimates(
-        spark.table(query_name), watch, "user_id", depth=depth, width=width
+        registers, watch, "user_id", depth=depth, width=width
     ).orderBy("user_id")
 
 
 def _run_register_stream_to_versioned(
-    regs: DataFrame,
-    table_path: str,
-    checkpoint_dir: str | None,
-    state_partitions: int = 8,
+    regs: DataFrame, table_path: str, checkpoint_dir: str | None
 ) -> None:
     """Drive a complete-mode register aggregation into the versioned
     table layer: every micro-batch delivers the FULL recomputed
@@ -377,26 +384,13 @@ def _run_register_stream_to_versioned(
     as of any ingest point). This is the production shape the
     memory-sink runners (right for oracles, not for pipelines) stand
     in for."""
-    import tempfile  # noqa: PLC0415
-
-    from ..sources import versioned as vt  # noqa: PLC0415
-
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="sketch_vckpt_")
-
-    def commit_batch(batch: DataFrame, batch_id: int) -> None:
-        vt.write_version(batch, table_path)
-
-    with bounded_state_partitions(regs.sparkSession, state_partitions):
-        q = (
-            regs.writeStream.outputMode("complete")
-            .foreachBatch(commit_batch)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    _drain(
+        regs,
+        state_partitions=8,
+        sink=lambda batch, _id: vt.write_version(batch, table_path),
+        checkpoint_dir=checkpoint_dir,
+        output_mode="complete",
+    )
 
 
 def run_hll_stream_to_versioned(
@@ -414,7 +408,6 @@ def run_hll_stream_to_versioned(
     version's registers are bit-identical to the memory-sink and batch
     paths over the same rows (pinned in tests)."""
     from ..operators.sketches import hll_finalize, hll_registers  # noqa: PLC0415
-    from ..sources import versioned as vt  # noqa: PLC0415
 
     stream = read_event_stream(spark, source_path)
     regs = hll_registers(stream, "user_id", ["event_type"], p)
@@ -438,13 +431,10 @@ def run_cms_stream_to_versioned(
     COUNT registers are micro-batch-order invariant, so the final
     version equals the memory-sink and batch registers bit-for-bit
     (pinned in tests)."""
-    from pyspark.sql import functions as F  # noqa: PLC0415
-
     from ..operators.sketches import (  # noqa: PLC0415
         cms_point_estimates,
         cms_registers,
     )
-    from ..sources import versioned as vt  # noqa: PLC0415
 
     stream = read_event_stream(spark, source_path)
     regs = cms_registers(stream, "user_id", depth=depth, width=width)
@@ -504,18 +494,7 @@ def run_enriched_stream_to_memory(
 ) -> DataFrame:
     stream = read_event_stream(spark, source_path)
     agg = streaming_enriched_brand_counts(stream, items)
-    with bounded_state_partitions(spark, state_partitions):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table(query_name)
+    return _drain(agg, state_partitions, query_name, output_mode="complete")
 
 
 def run_streaming_warehouse_merge(
@@ -547,12 +526,8 @@ def run_streaming_warehouse_merge(
     Returns the final warehouse contents as a batch DataFrame.
     """
     import os  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
 
     from ..operators.merge import merge_ignore  # noqa: PLC0415
-
-    stream = read_event_stream(spark, source_path)
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="stream_merge_ckpt_")
 
     def upsert_batch(batch: DataFrame, batch_id: int) -> None:
         sess = batch.sparkSession
@@ -569,15 +544,7 @@ def run_streaming_warehouse_merge(
             shutil.rmtree(target_dir)
         os.rename(staging, target_dir)
 
-    q = (
-        stream.writeStream.foreachBatch(upsert_batch)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(read_event_stream(spark, source_path), None, upsert_batch, checkpoint_dir)
     return spark.read.parquet(target_dir)
 
 
@@ -657,18 +624,7 @@ def run_attribution_stream_to_memory(
             F.col("event_type") == "purchase"
         ),
     )
-    with bounded_state_partitions(spark, state_partitions):
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table(query_name)
+    return _drain(joined, state_partitions, query_name)
 
 
 def run_streaming_versioned_merge(
@@ -688,30 +644,13 @@ def run_streaming_versioned_merge(
     the merge is idempotent on ``keys``, so a re-delivered batch
     commits a content-identical version. Returns the final snapshot.
     """
-    import tempfile  # noqa: PLC0415
-
-    from ..operators.merge import versioned_merge  # noqa: PLC0415
-    from ..sources import versioned as vt  # noqa: PLC0415
-
-    stream = read_event_stream(spark, source_path)
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="stream_vmerge_ckpt_")
 
     def commit_batch(batch: DataFrame, batch_id: int) -> None:
-        sess = batch.sparkSession
-        if vt.table_versions(table_path):
-            versioned_merge(sess, table_path, batch, list(keys), update=False)
-        else:
-            vt.write_version(batch, table_path)
+        versioned_merge(
+            batch.sparkSession, table_path, batch, list(keys), update=False
+        )
 
-    q = (
-        stream.writeStream.foreachBatch(commit_batch)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(read_event_stream(spark, source_path), None, commit_batch, checkpoint_dir)
     return vt.read_version(spark, table_path)
 
 
@@ -755,24 +694,75 @@ def read_embedding_stream(spark: SparkSession, path: str) -> DataFrame:
     return _parquet_file_stream(spark, path)
 
 
-def _timed_batches(fn, batch_secs):
-    """Optional per-trigger wall-clock hook for the streaming gates
-    (VERDICT r11 item 5): when the caller passes a ``batch_secs``
-    list, each foreachBatch commit's wall seconds are appended to it —
-    the steady-state per-micro-batch cost, separated from the
-    train/seed/fixture SETUP the lifecycle smokes otherwise fold into
-    one flat bench number. ``None`` (the default everywhere) is
-    zero-overhead passthrough."""
-    if batch_secs is None:
-        return fn
-    import time  # noqa: PLC0415
+def _run_dedup_gate(
+    stream: DataFrame,
+    decisions_path: str,
+    id_col: str,
+    decide,
+    append,
+    state_partitions: int,
+    checkpoint_dir: str | None,
+    batch_secs: list | None,
+) -> DataFrame:
+    """The one micro-batch protocol every streaming dedup gate runs.
 
-    def wrapped(batch, batch_id):
-        t0 = time.time()
-        fn(batch, batch_id)
-        batch_secs.append(round(time.time() - t0, 2))
+    A gate supplies ``decide(sess, batch) -> (decisions, survivors)``
+    — the batch's decision rows (``id_col``, matched_store_id,
+    matched_batch_id, keep) and a function from the kept ids to the
+    rows its store gains — and ``append(sess, survivors)``, its store
+    commit. Per trigger this function:
 
-    return wrapped
+    1. pins the decisions with an eager ``localCheckpoint``;
+    2. commits them (insert-if-absent on ``id_col``: exactly one
+       decisions version per batch) while a second thread builds and
+       pins the survivors — both read only pinned rows, so they
+       overlap (guide §2.6; the serial form measured slower);
+    3. runs ``append`` strictly after the decisions commit returned.
+
+    Two ordering invariants make the replay of a batch that crashed at
+    any commit effectively-once:
+
+    - Decisions before store. Were the store appended first and the
+      trigger crashed before the decisions commit, the replayed batch
+      would match its own store entries and flip its keep decisions.
+      In this order a replay re-decides against the same store,
+      re-commits content-identical decisions and survivors, and the
+      insert-if-absent merges turn both into no-ops.
+    - Codes ⊆ vectors. The semantic gate's ``append`` commits the
+      keepers' raw vectors, then their IVF-PQ codes: the exact re-rank
+      id-joins shortlisted codes to the vectors table, so a code must
+      never exist without its vector. An orphan vector has no code, is
+      never a candidate, and leaves the replay's decisions unchanged.
+
+    The store is the only cross-batch state and lives in the versioned
+    table layer; Spark-side streaming state is zero rows. Returns the
+    final decisions snapshot."""
+
+    def commit_batch(batch: DataFrame, batch_id: int) -> None:
+        sess = batch.sparkSession
+        decisions, survivors = decide(sess, batch)
+        decisions = decisions.localCheckpoint(eager=True)
+        kept = decisions.filter(F.col("keep")).select(id_col)
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            f_dec = pool.submit(
+                inheritable(
+                    lambda: versioned_merge(
+                        sess, decisions_path, decisions, [id_col], update=False
+                    )
+                )
+            )
+            f_surv = pool.submit(
+                inheritable(lambda: survivors(kept).localCheckpoint(eager=True))
+            )
+            f_dec.result()
+            rows = f_surv.result()
+        append(sess, rows)
+
+    _drain(
+        stream, state_partitions, commit_batch, checkpoint_dir,
+        batch_secs=batch_secs,
+    )
+    return vt.read_version(stream.sparkSession, decisions_path)
 
 
 def run_streaming_image_dedup(
@@ -857,95 +847,35 @@ def _run_streaming_hash_dedup(
     checkpoint_dir: str | None,
     batch_secs: list | None = None,
 ) -> DataFrame:
-    """Shared body of the streaming signature-dedup gates (image
-    dHash / video temporal fingerprint): hash each micro-batch ONCE,
-    gate it against the persisted signature store via
-    operators/dedup.py:hamming_incremental, commit decisions and
-    survivor signatures effectively-once (insert-if-absent versioned
-    merges)."""
-    import tempfile  # noqa: PLC0415
-
+    """The signature-dedup gate (image dHash / video temporal
+    fingerprint) on :func:`_run_dedup_gate`: hash each micro-batch
+    ONCE, gate it against the persisted signature store via
+    operators/dedup.py:hamming_incremental, append the survivors'
+    signatures to the store."""
     from ..operators import dedup as dedup_ops  # noqa: PLC0415
-    from ..operators.merge import versioned_merge  # noqa: PLC0415
-    from ..sources import versioned as vt  # noqa: PLC0415
 
-    stream = read_media_stream(spark, source_path)
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="stream_hashdedup_ckpt_")
-
-    def commit_batch(batch: DataFrame, batch_id: int) -> None:
-        sess = batch.sparkSession
-        # hash the batch ONCE (eager — the dedup check and the
-        # survivor append both read it)
+    def decide(sess, batch):
+        # eager: the dedup check and the survivor build both read it
         hashed = hash_table_fn(batch).localCheckpoint(eager=True)
-        if vt.table_versions(store_path):
-            store = vt.read_version(sess, store_path).select(
-                F.col("media_id").alias("id"), F.col(hash_col).alias("sh")
-            )
-        else:
-            store = sess.createDataFrame([], "id long, sh long")
-        decisions = dedup_ops.hamming_incremental(
-            store,
-            hashed.select(
-                F.col("media_id").alias("id"), F.col(hash_col).alias("sh")
-            ),
-            max_hamming=max_hamming,
-        ).localCheckpoint(eager=True)
-
-        def _commit_decisions() -> None:
-            if vt.table_versions(decisions_path):
-                versioned_merge(
-                    sess, decisions_path, decisions, ["media_id"],
-                    update=False,
-                )
-            else:
-                vt.write_version(decisions, decisions_path)
-
-        # The decisions COMMIT and the survivor-join COMPUTE are
-        # independent (both read only the pinned `decisions` /
-        # `hashed` checkpoints) — overlap them (guide §2.6). The
-        # store COMMIT stays strictly AFTER the decisions commit:
-        # were the store appended first and the trigger crashed, the
-        # replayed batch would match its own store entries and flip
-        # keep decisions — the effectively-once contract rests on
-        # this order.
-        from concurrent.futures import ThreadPoolExecutor  # noqa: PLC0415
-
-        from ..session import inheritable  # noqa: PLC0415
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_dec = pool.submit(inheritable(_commit_decisions))
-            f_surv = pool.submit(
-                inheritable(
-                    lambda: hashed.join(
-                        decisions.filter(F.col("keep")).select("media_id"),
-                        "media_id",
-                    )
-                    .select("media_id", hash_col)
-                    .localCheckpoint(eager=True)
-                )
-            )
-            f_dec.result()
-            survivors = f_surv.result()
-        if vt.table_versions(store_path):
-            versioned_merge(
-                sess, store_path, survivors, ["media_id"], update=False
-            )
-        else:
-            vt.write_version(survivors, store_path)
-
-    with bounded_state_partitions(spark, state_partitions):
-        q = (
-            stream.writeStream.foreachBatch(
-                _timed_batches(commit_batch, batch_secs)
-            )
-            .option("checkpointLocation", ckpt)
-            .start()
+        store = vt.read_latest_or_empty(
+            sess, store_path, f"media_id long, {hash_col} long"
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return vt.read_version(spark, decisions_path)
+        decisions = dedup_ops.hamming_incremental(
+            store.select(F.col("media_id").alias("id"), F.col(hash_col).alias("sh")),
+            hashed.select(F.col("media_id").alias("id"), F.col(hash_col).alias("sh")),
+            max_hamming=max_hamming,
+        )
+        return decisions, lambda kept: hashed.join(kept, "media_id").select(
+            "media_id", hash_col
+        )
+
+    def append(sess, survivors: DataFrame) -> None:
+        versioned_merge(sess, store_path, survivors, ["media_id"], update=False)
+
+    return _run_dedup_gate(
+        read_media_stream(spark, source_path), decisions_path, "media_id",
+        decide, append, state_partitions, checkpoint_dir, batch_secs,
+    )
 
 
 def run_streaming_semantic_dedup(
@@ -979,14 +909,7 @@ def run_streaming_semantic_dedup(
     Spark-side streaming state is zero rows. Output: the final
     decisions snapshot — (vec_id, matched_store_id, matched_batch_id,
     keep), -1 sentinels."""
-    import tempfile  # noqa: PLC0415
-
     from ..operators import similarity  # noqa: PLC0415
-    from ..operators.merge import versioned_merge  # noqa: PLC0415
-    from ..sources import versioned as vt  # noqa: PLC0415
-
-    stream = read_embedding_stream(spark, source_path)
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="stream_semdedup_ckpt_")
 
     # ONE bounded index load for the WHOLE stream (r12; was per
     # micro-batch): the index is trained before the stream starts and
@@ -994,75 +917,28 @@ def run_streaming_semantic_dedup(
     # stream's lifetime — the load collects (and their plan builds)
     # come out of every trigger's steady-state cost.
     cent, books = similarity.load_ivf_pq_index(spark, index_path)
+    vectors_path = f"{index_path}/vectors"
 
-    def commit_batch(batch: DataFrame, batch_id: int) -> None:
-        sess = batch.sparkSession
-        corpus = vt.read_version(sess, f"{index_path}/vectors")
+    def decide(sess, batch):
         decisions = similarity.semantic_dedup_incremental(
-            sess, batch, index_path, corpus,
+            sess, batch, index_path, vt.read_version(sess, vectors_path),
             threshold=threshold, n_probe=n_probe, index=(cent, books),
-        ).localCheckpoint(eager=True)
+        )
+        return decisions, lambda kept: batch.join(kept, "vec_id")
 
-        def _commit_decisions() -> None:
-            if vt.table_versions(decisions_path):
-                versioned_merge(
-                    sess, decisions_path, decisions, ["vec_id"],
-                    update=False,
-                )
-            else:
-                vt.write_version(decisions, decisions_path)
-
-        def _commit_vectors() -> DataFrame:
-            keep = batch.join(
-                decisions.filter(F.col("keep")).select("vec_id"), "vec_id"
-            ).localCheckpoint(eager=True)  # feeds codes encode + append
-            versioned_merge(
-                sess, f"{index_path}/vectors", keep, ["vec_id"],
-                update=False,
-            )
-            return keep
-
-        # Decisions and vectors commit CONCURRENTLY (guide §2.6) —
-        # safe under a mid-crash in either order: an orphan vector
-        # (vectors landed, decisions didn't) has no code row, so it
-        # is never a shortlist candidate and the replayed batch's
-        # decisions are unchanged; decisions-without-vectors replays
-        # both merges idempotently. The CODES merge stays strictly
-        # LAST: codes ⊆ vectors through a crash (ADVICE r11 — the
-        # exact re-rank id-joins shortlist candidates to the vectors
-        # table, so an unverifiable code must never exist), and
-        # codes-before-decisions would make a replayed batch match
-        # its own codes and flip keep decisions.
-        from concurrent.futures import ThreadPoolExecutor  # noqa: PLC0415
-
-        from ..session import inheritable  # noqa: PLC0415
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_dec = pool.submit(inheritable(_commit_decisions))
-            f_vec = pool.submit(inheritable(_commit_vectors))
-            f_dec.result()
-            keepers = f_vec.result()
+    def append(sess, keepers: DataFrame) -> None:
+        # vectors, then codes: codes ⊆ vectors through a crash
+        versioned_merge(sess, vectors_path, keepers, ["vec_id"], update=False)
         versioned_merge(
-            sess,
-            f"{index_path}/codes",
+            sess, f"{index_path}/codes",
             similarity.ivf_pq_codes_table(keepers, cent, books),
-            ["neighbor_id"],
-            update=False,
+            ["neighbor_id"], update=False,
         )
 
-    with bounded_state_partitions(spark, state_partitions):
-        q = (
-            stream.writeStream.foreachBatch(
-                _timed_batches(commit_batch, batch_secs)
-            )
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return vt.read_version(spark, decisions_path)
+    return _run_dedup_gate(
+        read_embedding_stream(spark, source_path), decisions_path, "vec_id",
+        decide, append, state_partitions, checkpoint_dir, batch_secs,
+    )
 
 
 def streaming_doc_quality_counts(
@@ -1201,18 +1077,7 @@ def run_crawl_triage_stream_to_memory(
         signal_col = "sig_text"
         stream = stream.withColumn(signal_col, t)
     agg = streaming_crawl_triage_counts(stream, signal_col=signal_col)
-    with bounded_state_partitions(spark, state_partitions):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table(query_name)
+    return _drain(agg, state_partitions, query_name, output_mode="complete")
 
 
 def run_doc_quality_stream_to_memory(
@@ -1225,18 +1090,7 @@ def run_doc_quality_stream_to_memory(
     contents of ``source_path`` and return the memory-sink table."""
     stream = read_document_stream(spark, source_path)
     agg = streaming_doc_quality_counts(stream)
-    with bounded_state_partitions(spark, state_partitions):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table(query_name)
+    return _drain(agg, state_partitions, query_name, output_mode="complete")
 
 
 def run_streaming_minhash_dedup(
@@ -1278,86 +1132,28 @@ def run_streaming_minhash_dedup(
     snapshot — (doc_id, matched_store_id, matched_batch_id, keep),
     -1 sentinels for no-match.
     """
-    import tempfile  # noqa: PLC0415
-
     from ..operators import dedup as dedup_ops  # noqa: PLC0415
-    from ..operators.merge import versioned_merge  # noqa: PLC0415
-    from ..sources import versioned as vt  # noqa: PLC0415
 
-    stream = read_document_stream(spark, source_path)
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="stream_mhdedup_ckpt_")
-
-    def commit_batch(batch: DataFrame, batch_id: int) -> None:
-        sess = batch.sparkSession
+    def decide(sess, batch):
         docs = batch.select("doc_id", "text")
         # Sign the batch ONCE (eager — both the dedup check and the
-        # survivor append read it) instead of paying two 64-aggregate
+        # survivor build read it) instead of paying two 64-aggregate
         # signing passes per micro-batch.
-        sigs = dedup_ops.minhash_signatures(docs).localCheckpoint(
-            eager=True
-        )
-        if vt.table_versions(store_path):
-            store = vt.read_version(sess, store_path).select(
-                "doc_id", "signature"
-            )
-        else:
-            store = sess.createDataFrame(
-                [], "doc_id long, signature array<bigint>"
-            )
+        sigs = dedup_ops.minhash_signatures(docs).localCheckpoint(eager=True)
+        store = vt.read_latest_or_empty(
+            sess, store_path, "doc_id long, signature array<bigint>"
+        ).select("doc_id", "signature")
         decisions = dedup_ops.minhash_incremental(
             store, docs, threshold=threshold, incoming_sigs=sigs
-        ).localCheckpoint(eager=True)
-
-        def _commit_decisions() -> None:
-            if vt.table_versions(decisions_path):
-                versioned_merge(
-                    sess, decisions_path, decisions, ["doc_id"],
-                    update=False,
-                )
-            else:
-                vt.write_version(decisions, decisions_path)
-
-        # Overlap the decisions COMMIT with the survivor-join COMPUTE
-        # (guide §2.6 — both read only the pinned `decisions`/`sigs`
-        # checkpoints). The store COMMIT stays strictly AFTER the
-        # decisions commit: store-before-decisions under a mid-crash
-        # would make the replayed batch match its own signatures and
-        # flip keep decisions (the effectively-once contract).
-        from concurrent.futures import ThreadPoolExecutor  # noqa: PLC0415
-
-        from ..session import inheritable  # noqa: PLC0415
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_dec = pool.submit(inheritable(_commit_decisions))
-            f_surv = pool.submit(
-                inheritable(
-                    lambda: sigs.join(
-                        decisions.filter(F.col("keep")).select("doc_id"),
-                        F.col("id") == F.col("doc_id"),
-                    )
-                    .select("doc_id", "signature")
-                    .localCheckpoint(eager=True)
-                )
-            )
-            f_dec.result()
-            survivors = f_surv.result()
-        if vt.table_versions(store_path):
-            versioned_merge(
-                sess, store_path, survivors, ["doc_id"], update=False
-            )
-        else:
-            vt.write_version(survivors, store_path)
-
-    with bounded_state_partitions(spark, state_partitions):
-        q = (
-            stream.writeStream.foreachBatch(
-                _timed_batches(commit_batch, batch_secs)
-            )
-            .option("checkpointLocation", ckpt)
-            .start()
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return vt.read_version(spark, decisions_path)
+        return decisions, lambda kept: sigs.join(
+            kept, F.col("id") == F.col("doc_id")
+        ).select("doc_id", "signature")
+
+    def append(sess, survivors: DataFrame) -> None:
+        versioned_merge(sess, store_path, survivors, ["doc_id"], update=False)
+
+    return _run_dedup_gate(
+        read_document_stream(spark, source_path), decisions_path, "doc_id",
+        decide, append, state_partitions, checkpoint_dir, batch_secs,
+    )

@@ -1276,6 +1276,21 @@ def test_video_table_distributed_matches_driver_rows(spark):
     assert got_mp4 == sorted(want_mp4, key=lambda r: r[0])
 
 
+@pytest.mark.parametrize(
+    "make_table",
+    [
+        multimodal.synthetic_mp4_sample_table,
+        multimodal.synthetic_near_dup_video_table,
+    ],
+)
+@pytest.mark.parametrize("groups", [0, -1])
+def test_synthetic_video_tables_reject_non_positive_groups(
+    spark, make_table, groups
+):
+    with pytest.raises(ValueError, match="groups"):
+        make_table(spark, groups)
+
+
 def test_video_corrupt_payloads_skip_contract(spark):
     """Truncations/byte-flips of an MJPEG stream must surface as
     NotImplementedError only (the Arrow skip contract), and
@@ -1431,6 +1446,244 @@ def test_streaming_video_gate_replay_is_effectively_once(spark, tmp_path):
     assert store_v1 == store_v2
     assert any(r["keep"] for r in first)
     assert any(not r["keep"] for r in first)
+
+
+def _stage_micro_batches(src, tables) -> None:
+    """One parquet file per micro-batch with ascending mtimes, so the
+    file source (one file per trigger) replays them in order."""
+    import os
+    import time
+
+    import pyarrow.parquet as pa_pq
+
+    os.makedirs(src)
+    now = time.time()
+    for i, table in enumerate(tables):
+        dst = os.path.join(src, f"b{i}.parquet")
+        pa_pq.write_table(table, dst)
+        os.utime(dst, (now - 120 + 60 * i, now - 120 + 60 * i))
+
+
+def _video_gate(spark, base, sf_dir):
+    """Video gate over two batches of the near-dup fixture (media_id
+    g*3+v+1 for group g, variant v), store seeded with group 0's base:
+    each batch carries a store hit, a within-batch copy and a keeper,
+    and batch 1 a copy of a batch-0 keeper."""
+    import pyarrow as pa
+
+    from etl_s3_airflow_snowflake_powerbi_marketing_data_spark.sources import (
+        versioned as vt,
+    )
+
+    rows = multimodal.synthetic_near_dup_video_rows(4)
+    _stage_micro_batches(
+        f"{base}/src",
+        [
+            pa.table({
+                "media_id": pa.array([r[0] for r in part], pa.int64()),
+                "media_type": pa.array([r[1] for r in part]),
+                "payload": pa.array([r[2] for r in part], pa.binary()),
+                "meta_source": pa.array([r[3] for r in part]),
+            })
+            for part in (
+                [r for r in rows if r[0] in (2, 4, 5, 7)],
+                [r for r in rows if r[0] in (3, 6, 10, 11)],
+            )
+        ],
+    )
+    tbl = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
+    vt.write_version(
+        multimodal.video_fingerprint_table(
+            tbl.filter(F.col("media_id") == 1)
+        ).select("media_id", "vfp"),
+        f"{base}/store",
+    )
+
+    def run(ckpt):
+        pipeline.run_streaming_video_dedup(
+            spark, f"{base}/src", f"{base}/store", f"{base}/dec",
+            checkpoint_dir=ckpt,
+        )
+
+    return run, ["dec", "store"]
+
+
+def _minhash_gate(spark, base, sf_dir):
+    """MinHash gate over two batches with no store yet: batch 0 holds
+    a within-batch copy, batch 1 a copy of a batch-0 keeper and a
+    within-batch copy."""
+    import random
+
+    import pyarrow as pa
+
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(400)]
+    text = {i: " ".join(rng.choice(vocab) for _ in range(40)) for i in range(1, 11)}
+    batches = [
+        [(i, text[i]) for i in range(1, 7)] + [(101, text[1])],
+        [(i, text[i]) for i in range(7, 11)] + [(102, text[2]), (107, text[7])],
+    ]
+    _stage_micro_batches(
+        f"{base}/src",
+        [
+            pa.table({
+                "doc_id": pa.array([d for d, _ in b], pa.int64()),
+                "text": pa.array([t for _, t in b]),
+            })
+            for b in batches
+        ],
+    )
+
+    def run(ckpt):
+        pipeline.run_streaming_minhash_dedup(
+            spark, f"{base}/src", f"{base}/store", f"{base}/dec",
+            checkpoint_dir=ckpt,
+        )
+
+    return run, ["dec", "store"]
+
+
+def _semantic_gate(spark, base, sf_dir):
+    """Semantic gate over two batches of the test embeddings, index
+    trained on even ids below 200; batch 0 carries a copy of a store
+    vector and a within-batch copy, batch 1 a copy of a batch-0
+    keeper and a within-batch copy."""
+    import pyarrow as pa
+    import pyarrow.compute as pa_c
+    import pyarrow.parquet as pa_pq
+
+    from etl_s3_airflow_snowflake_powerbi_marketing_data_spark.operators import (
+        similarity,
+    )
+    from etl_s3_airflow_snowflake_powerbi_marketing_data_spark.sources import (
+        versioned as vt,
+    )
+
+    emb = pa_pq.read_table(table_path(sf_dir, "embeddings")).select(
+        ["vec_id", "embedding"]
+    )
+
+    def ids(*wanted):
+        return emb.filter(pa_c.is_in(emb["vec_id"], pa.array(wanted, pa.int64())))
+
+    def copy(src_id, new_id):
+        row = ids(src_id)
+        return row.set_column(0, "vec_id", pa.array([new_id], pa.int64()))
+
+    _stage_micro_batches(
+        f"{base}/src",
+        [
+            pa.concat_tables([ids(*range(1, 100, 2)), copy(0, 1000), copy(1, 1001)]),
+            pa.concat_tables(
+                [ids(*range(101, 200, 2)), copy(3, 1003), copy(101, 1101)]
+            ),
+        ],
+    )
+    index = f"{base}/index"
+    initial = spark.createDataFrame(ids(*range(0, 200, 2)).to_pandas())
+    cent, books = similarity.train_ivf_pq_index(initial, train_iters=2)
+    similarity.save_ivf_pq_index(spark, cent, books, index)
+    similarity.build_ivf_pq_codes(spark, initial, index, index=(cent, books))
+    vt.write_version(initial, f"{index}/vectors")
+
+    def run(ckpt):
+        pipeline.run_streaming_semantic_dedup(
+            spark, f"{base}/src", index, f"{base}/dec", checkpoint_dir=ckpt
+        )
+
+    return run, ["dec", "index/vectors", "index/codes"]
+
+
+_GATES = {"video": _video_gate, "minhash": _minhash_gate, "semantic": _semantic_gate}
+# Store commits per batch after the decisions commit: one signature
+# store append, or the semantic gate's vectors then codes.
+_COMMITS_PER_BATCH = {"video": 2, "minhash": 2, "semantic": 3}
+
+
+def _table_rows(spark, path):
+    from etl_s3_airflow_snowflake_powerbi_marketing_data_spark.sources import (
+        versioned as vt,
+    )
+
+    return sorted(
+        tuple(tuple(v) if isinstance(v, list) else v for v in r)
+        for r in vt.read_version(spark, path).collect()
+    )
+
+
+def _gate_tables(spark, gate, base, sf_dir, crash_at=None, monkeypatch=None):
+    """Build the gate's fixture under ``base`` and run it to the end;
+    with ``crash_at`` the gate's k-th ``versioned_merge`` call raises
+    first, and the gate restarts on the same checkpoint. Returns
+    {table: sorted rows}."""
+    import itertools
+
+    run, tables = _GATES[gate](spark, base, sf_dir)
+    ckpt = f"{base}/ckpt"
+    if crash_at is not None:
+        real = pipeline.versioned_merge
+        calls = itertools.count(1)
+
+        def crashing(*args, **kwargs):
+            if next(calls) == crash_at:
+                raise RuntimeError(f"injected crash at commit {crash_at}")
+            return real(*args, **kwargs)
+
+        monkeypatch.setattr(pipeline, "versioned_merge", crashing)
+        with pytest.raises(Exception, match="injected crash"):
+            run(ckpt)
+        monkeypatch.setattr(pipeline, "versioned_merge", real)
+    run(ckpt)
+    return {t: _table_rows(spark, f"{base}/{t}") for t in tables}
+
+
+@pytest.fixture(scope="module")
+def uncrashed_gate_tables(spark, sf_dir, tmp_path_factory):
+    """Each gate's tables after an uncrashed run, built once per gate."""
+    from etl_s3_airflow_snowflake_powerbi_marketing_data_spark.sources import (
+        versioned as vt,
+    )
+
+    cache = {}
+
+    def get(gate):
+        if gate not in cache:
+            base = str(tmp_path_factory.mktemp(f"{gate}_ref"))
+            cache[gate] = _gate_tables(spark, gate, base, sf_dir)
+            # one decisions version per micro-batch
+            assert vt.table_versions(f"{base}/dec") == [1, 2]
+        return cache[gate]
+
+    return get
+
+
+@pytest.mark.parametrize(
+    "gate,step",
+    [("video", 1), ("video", 2), ("minhash", 1), ("minhash", 2),
+     ("semantic", 1), ("semantic", 2), ("semantic", 3)],
+)
+def test_streaming_gate_crash_replay_matches_uncrashed(
+    spark, sf_dir, tmp_path, monkeypatch, uncrashed_gate_tables, gate, step
+):
+    """A crash at any commit of a gate's second micro-batch — decisions
+    (step 1) or a store commit (step 2, and step 3 for the semantic
+    gate's codes) — then a restart on the same checkpoint leaves every
+    table readable and equal to an uncrashed run: the replay neither
+    loses nor duplicates rows, and no batch matches its own store
+    entries. The second batch is the one with every table already
+    committed and a store that earlier batches grew."""
+    want = uncrashed_gate_tables(gate)
+    crash_at = _COMMITS_PER_BATCH[gate] + step
+    got = _gate_tables(
+        spark, gate, str(tmp_path), sf_dir, crash_at=crash_at,
+        monkeypatch=monkeypatch,
+    )
+    assert got == want
+    keeps = [r for r in got["dec"] if r[-1]]
+    assert keeps and len(keeps) < len(got["dec"])
+    if gate == "semantic":
+        codes = {r[0] for r in got["index/codes"]}
+        assert codes <= {r[0] for r in got["index/vectors"]}
 
 
 def test_mp4_sample_table_roundtrip_and_remux_invariance():

@@ -207,6 +207,34 @@ def test_append_race_does_not_lose_winners_prefixes(spark, tmp_path):
     assert got == {1: "a", 7: "w", 2: "b"}
 
 
+def test_publish_crash_before_link_leaves_prior_version(
+    spark, tmp_path, monkeypatch
+):
+    """A crash after the manifest's temp file is written but before it
+    is linked into place must leave no visible version: the table reads
+    at the prior version and the next append commits normally."""
+    path = str(tmp_path / "t")
+    vt.write_version(_df(spark, [(1, "a")]), path)
+
+    def crash(src, dst):
+        raise OSError("injected crash before link")
+
+    monkeypatch.setattr(os, "link", crash)
+    # a crashed process runs no cleanup: the temp manifest stays behind
+    monkeypatch.setattr(os, "remove", lambda p: None)
+    with pytest.raises(OSError, match="injected crash"):
+        vt.write_version(_df(spark, [(2, "b")]), path, mode="append")
+    monkeypatch.undo()
+
+    assert any(
+        n.endswith(".tmp") for n in os.listdir(os.path.join(path, "_versions"))
+    )
+    assert vt.table_versions(path) == [1]
+    assert {r["k"] for r in vt.read_version(spark, path).collect()} == {1}
+    assert vt.write_version(_df(spark, [(3, "c")]), path, mode="append") == 2
+    assert {r["k"] for r in vt.read_version(spark, path).collect()} == {1, 3}
+
+
 def test_delete_where_rewrites_only_affected_prefixes(spark, tmp_path):
     path = str(tmp_path / "t_del")
     a = spark.createDataFrame([(1, "a"), (2, "a")], ["k", "grp"])
