@@ -144,6 +144,11 @@ def main() -> None:
         "n_queries": len(timings),
         "total_sec": total,
         "settled": settled,
+        # What produced the run: the session's local[cpus], the CPUs
+        # this process may use, and the sweeps each query's min is over.
+        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        "nproc": len(os.sched_getaffinity(0)),
+        "repeat": repeat,
         # Phase split for the lifecycle smokes (VERDICT r11 item 5):
         # setup_sec = index-train / store-seed / fixture staging;
         # per_batch_sec = each foreachBatch (or gate-loop) commit's

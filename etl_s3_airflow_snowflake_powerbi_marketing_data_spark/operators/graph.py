@@ -303,12 +303,15 @@ def hits(
             .agg(F.sum("hub").alias("auth"))
             .select(F.col("dst").alias("node"), "auth")
         )
-        # lazy pin (r13 — one ACTION per round, the CC/minhash
-        # discipline): hub's eager checkpoint below is the round's
-        # single job and materializes auth's blocks on first read;
-        # the end-of-round scores join then reads the SAME pinned
-        # blocks instead of paying a second materialization job.
-        # Dataflow (hence every score) is unchanged.
+        # lazy pin (one ACTION per round, the CC/minhash discipline):
+        # hub's eager checkpoint below is the round's only action and
+        # materializes auth's blocks on first read; the end-of-round
+        # scores join then reads the SAME pinned blocks instead of
+        # paying a second materialization. Under AQE the pin is not
+        # job-free: planning its RDD runs auth's shuffle and broadcast
+        # stages here, and only auth's final stage waits for hub
+        # (pinned by test_hits_runs_one_action_per_round). Dataflow
+        # (hence every score) is unchanged.
         auth = _normalize(
             nodes.join(auth_raw, "node", "left").select(
                 "node", F.coalesce("auth", F.lit(0)).alias("auth")

@@ -26,6 +26,8 @@ offsets, never an all-rows-on-one-task window.
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -72,6 +74,37 @@ def build_event_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ordered_surrogate_key(flat, "guid_event_raw", order_by=["event_id"])
 
 
+@dataclass(frozen=True)
+class SurrogateKey:
+    """A build's guid column and the order that numbers it (P7).
+
+    Each guid-keyed build is its un-keyed rows plus this key, so a
+    caller that renumbers rows itself (the daily MERGE continues after
+    the warehouse max) takes the rows without paying for a numbering it
+    would throw away."""
+
+    name: str
+    order_by: tuple[str, ...]
+    descending: bool = False
+
+    def assign(self, rows: DataFrame) -> DataFrame:
+        return ordered_surrogate_key(
+            rows, self.name, order_by=list(self.order_by), descending=self.descending
+        )
+
+
+D_EVENT_KEY = SurrogateKey("guid_event", ("event_id",))
+D_USER_KEY = SurrogateKey("guid_user", ("user_id",))
+D_PARAMETER_KEY = SurrogateKey("guid_parameter", ("parameter_name",))
+# Newest-first, id tiebreak (`etl_s3_snowflake_f_events.py:36`).
+F_EVENTS_KEY = SurrogateKey("guid_event", ("event_time", "event_id"), descending=True)
+
+
+def d_event_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Event dim rows before the guid: distinct event ids."""
+    return load_table(spark, sf_dir, "events").select("event_id").distinct()
+
+
 def build_d_event(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event dim: distinct event ids + contiguous guid.
 
@@ -79,23 +112,28 @@ def build_d_event(spark: SparkSession, sf_dir: str) -> DataFrame:
     range index). Deterministic survivor: keys are already unique per
     row; ordering by the key itself pins guid assignment.
     """
-    events = load_table(spark, sf_dir, "events").select("event_id").distinct()
-    return ordered_surrogate_key(events, "guid_event", order_by=["event_id"])
+    return D_EVENT_KEY.assign(d_event_rows(spark, sf_dir))
+
+
+def d_user_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load_table(spark, sf_dir, "events").select("user_id").distinct()
 
 
 def build_d_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     """User dim ↔ `etl_s3_snowflake_d_user.py:28-34`."""
-    users = load_table(spark, sf_dir, "events").select("user_id").distinct()
-    return ordered_surrogate_key(users, "guid_user", order_by=["user_id"])
+    return D_USER_KEY.assign(d_user_rows(spark, sf_dir))
+
+
+def d_parameter_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load_table(spark, sf_dir, "events").select(
+        F.col("event_type").alias("parameter_name")
+    ).distinct()
 
 
 def build_d_parameter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Parameter dim (event_type plays parameter_name)
     ↔ `etl_s3_snowflake_d_parameter.py:24-36`."""
-    params = load_table(spark, sf_dir, "events").select(
-        F.col("event_type").alias("parameter_name")
-    ).distinct()
-    return ordered_surrogate_key(params, "guid_parameter", order_by=["parameter_name"])
+    return D_PARAMETER_KEY.assign(d_parameter_rows(spark, sf_dir))
 
 
 def build_d_item(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -118,10 +156,11 @@ def build_d_item(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _fact_columns(flat: DataFrame) -> DataFrame:
-    """Fact-table projection: renames + item-key normalization to long
-    (the VARCHAR-coercion fix, SURVEY.md §1.2 — float-formatted text
-    ids parse via the decimal path instead of silently nulling)."""
+def f_events_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Fact rows before the guid: renames + item-key normalization to
+    long (the VARCHAR-coercion fix, SURVEY.md §1.2 — float-formatted
+    text ids parse via the decimal path instead of silently nulling)."""
+    flat = _flat_events(spark, sf_dir)
     return flat.select(
         "event_id",
         F.col("ts").alias("event_time"),
@@ -143,10 +182,7 @@ def build_f_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     that order via the range-partitioned two-pass numbering (no
     single-partition stage even on the full fact).
     """
-    fact = _fact_columns(_flat_events(spark, sf_dir))
-    return ordered_surrogate_key(
-        fact, "guid_event", order_by=["event_time", "event_id"], descending=True
-    )
+    return F_EVENTS_KEY.assign(f_events_rows(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -157,13 +193,12 @@ def _filtered_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared CTE: FILTERED_EVENTS AS (SELECT * FROM f_events WHERE
     event_name = 'view_item') ↔ `etl_s3_snowflake_aggregated_views.py:27-28`.
 
-    Built from the flat parse, not ``build_f_events``: none of the KPI
+    Built from the un-keyed rows, not ``build_f_events``: none of the KPI
     views read ``guid_event``, so recomputing the numbering (its count
     branch + bucket join) would be dead weight Catalyst cannot fully
     prune. Against a materialized f_events table this is just a scan.
     """
-    fact = _fact_columns(_flat_events(spark, sf_dir))
-    return fact.filter(F.col("event_name") == VIEW_EVENT)
+    return f_events_rows(spark, sf_dir).filter(F.col("event_name") == VIEW_EVENT)
 
 
 def view_count_by_period(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -36,8 +36,9 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..operators.keys import ordered_surrogate_key
 from ..operators.merge import merge_ignore, merge_update
@@ -59,6 +60,41 @@ def _swap_write(result: DataFrame, path: str) -> None:
     if os.path.exists(path):
         shutil.rmtree(path)
     os.replace(staging, path)
+
+
+WAREHOUSE_TABLES = (
+    "event_raw",
+    "d_event",
+    "d_user",
+    "d_parameter",
+    "d_item",
+    "f_events",
+)
+
+# Declared warehouse contract — the reference's fixed CREATE OR REPLACE
+# TABLE schemas (`etl_s3_snowflake_d_event.py:33-42` and peers), stated
+# once here rather than re-inferred from files: every write checks its
+# build against it (schema drift is an ERROR, never a silent catalog
+# change), so plain-table reads can take the declaration instead of
+# paying a footer-inference job, and publish re-checks the files.
+WAREHOUSE_SCHEMAS: dict[str, str] = {
+    "event_raw": (
+        "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING,"
+        " value DOUBLE, item_key BIGINT, guid_event_raw BIGINT"
+    ),
+    "d_event": "event_id BIGINT, guid_event BIGINT",
+    "d_user": "user_id BIGINT, guid_user BIGINT",
+    "d_parameter": "parameter_name STRING, guid_parameter BIGINT",
+    "d_item": (
+        "item_id BIGINT, item_name STRING, item_brand STRING,"
+        " item_type STRING, item_size INT, item_price DOUBLE"
+    ),
+    "f_events": (
+        "event_id BIGINT, event_time TIMESTAMP, event_user_id BIGINT,"
+        " event_name STRING, event_value DOUBLE,"
+        " event_parameter_value BIGINT, guid_event BIGINT"
+    ),
+}
 
 
 # --- storage indirection: plain dirs vs the transactional layer ---------
@@ -87,15 +123,46 @@ def _table_exists(path: str) -> bool:
     return os.path.exists(path)
 
 
+def _declared_schema(path: str) -> StructType | None:
+    ddl = WAREHOUSE_SCHEMAS.get(os.path.basename(path))
+    return None if ddl is None else StructType.fromDDL(ddl)
+
+
+def _file_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema the table's files carry (inferred from the footers)."""
+    if _is_versioned_table(path):
+        from ..sources import versioned as vt  # noqa: PLC0415
+
+        return vt.read_version(spark, path).schema
+    return spark.read.parquet(path).schema
+
+
 def _read_tbl(spark: SparkSession, path: str) -> DataFrame:
     if _is_versioned_table(path):
         from ..sources import versioned as vt  # noqa: PLC0415
 
         return vt.read_version(spark, path)
-    return spark.read.parquet(path)
+    # A declared table was schema-checked when it was written, so its
+    # declaration stands in for the footer-inference job.
+    declared = _declared_schema(path)
+    reader = spark.read if declared is None else spark.read.schema(declared)
+    return reader.parquet(path)
 
 
 def _write_tbl(result: DataFrame, path: str) -> None:
+    declared = _declared_schema(path)
+    if declared is not None:
+        # Names and types; a parquet read makes every column nullable,
+        # so the build's nullability is not part of the contract.
+        def fields(schema):
+            return [(f.name, f.dataType) for f in schema.fields]
+
+        if fields(result.schema) != fields(declared):
+            raise ValueError(
+                f"schema drift in warehouse table {os.path.basename(path)!r}:"
+                f" declared {declared.simpleString()} but the build produces"
+                f" {result.schema.simpleString()}"
+            )
     if _is_versioned_table(path):
         from ..sources import versioned as vt  # noqa: PLC0415
 
@@ -115,58 +182,60 @@ def _null_safe_cond(keys: tuple[str, ...]):
 def _merge_into(
     spark: SparkSession,
     result_path: str,
-    fresh: DataFrame,
+    rows: DataFrame,
     keys: tuple[str, ...],
     update: bool,
-    guid_col: str | None = None,
-    guid_order: tuple[str, ...] = (),
+    key: marketing.SurrogateKey | None = None,
 ) -> None:
     """Bootstrap on first run; MERGE (ignore/update) afterwards.
 
-    When ``guid_col`` is given, surrogate keys stay globally unique
-    across daily loads: matched rows keep the target's guid, new rows
-    are renumbered contiguously after the warehouse max (ordered by
-    ``guid_order`` for determinism). Without this, each day's delta
-    would re-number from 1 and collide with existing guids."""
+    ``rows`` is the build without its surrogate key ``key``. The
+    bootstrap numbers every row with ``key`` (exactly the public
+    ``marketing.build_*`` output); a merge keeps surrogate keys
+    globally unique across daily loads instead: matched rows keep the
+    target's guid, and only the new rows are numbered, contiguously
+    after the warehouse max in the order of the leading merge key.
+    Without this, each day's delta would re-number from 1 and collide
+    with existing guids."""
     if not _table_exists(result_path):
-        _write_tbl(fresh, result_path)
+        _write_tbl(rows if key is None else key.assign(rows), result_path)
         return
     target = _read_tbl(spark, result_path)
-    if guid_col is None:
+    if key is None:
         merged = (
-            merge_update(target, fresh, list(keys))
+            merge_update(target, rows, list(keys))
             if update
-            else merge_ignore(target, fresh, list(keys))
+            else merge_ignore(target, rows, list(keys))
         )
         _write_tbl(merged, result_path)
         return
 
+    guid_col = key.name
     tgt_max = target.agg(F.max(guid_col)).first()[0] or 0
-    src = fresh.drop(guid_col)
     cond = _null_safe_cond(keys)
-    new_src = src.alias("s").join(target.alias("t"), cond, "left_anti")
+    new_rows = rows.alias("s").join(target.alias("t"), cond, "left_anti")
     new_numbered = ordered_surrogate_key(
-        new_src, guid_col, order_by=list(guid_order), start=tgt_max + 1
+        new_rows, guid_col, order_by=[keys[0]], start=tgt_max + 1
     ).select(*target.columns)
     if update:
         # Matched source rows take fresh attributes but keep the
         # target's stable guid.
         matched = (
-            src.alias("s")
+            rows.alias("s")
             .join(
                 target.select(*keys, guid_col).alias("t"),
                 cond,
                 "inner",
             )
             .select(
-                *[F.col(f"s.{c}") for c in src.columns],
+                *[F.col(f"s.{c}") for c in rows.columns],
                 F.col(f"t.{guid_col}").alias(guid_col),
             )
             .select(*target.columns)
         )
         kept_old = (
             target.alias("t")
-            .join(src.alias("s"), cond, "left_anti")
+            .join(rows.alias("s"), cond, "left_anti")
             .select(*target.columns)
         )
         merged = kept_old.unionByName(matched).unionByName(new_numbered)
@@ -189,11 +258,10 @@ def _stage_d_event(spark: SparkSession, sf_dir: str, warehouse_dir: str) -> None
     _merge_into(
         spark,
         _table_dir(warehouse_dir, "d_event"),
-        marketing.build_d_event(spark, sf_dir),
+        marketing.d_event_rows(spark, sf_dir),
         ("event_id",),
         update=False,
-        guid_col="guid_event",
-        guid_order=("event_id",),
+        key=marketing.D_EVENT_KEY,
     )
 
 
@@ -212,11 +280,10 @@ def _stage_d_parameter(spark: SparkSession, sf_dir: str, warehouse_dir: str) -> 
     _merge_into(
         spark,
         _table_dir(warehouse_dir, "d_parameter"),
-        marketing.build_d_parameter(spark, sf_dir),
+        marketing.d_parameter_rows(spark, sf_dir),
         ("parameter_name",),
         update=False,
-        guid_col="guid_parameter",
-        guid_order=("parameter_name",),
+        key=marketing.D_PARAMETER_KEY,
     )
 
 
@@ -224,11 +291,10 @@ def _stage_d_user(spark: SparkSession, sf_dir: str, warehouse_dir: str) -> None:
     _merge_into(
         spark,
         _table_dir(warehouse_dir, "d_user"),
-        marketing.build_d_user(spark, sf_dir),
+        marketing.d_user_rows(spark, sf_dir),
         ("user_id",),
         update=False,
-        guid_col="guid_user",
-        guid_order=("user_id",),
+        key=marketing.D_USER_KEY,
     )
 
 
@@ -237,45 +303,11 @@ def _stage_f_events(spark: SparkSession, sf_dir: str, warehouse_dir: str) -> Non
     _merge_into(
         spark,
         _table_dir(warehouse_dir, "f_events"),
-        marketing.build_f_events(spark, sf_dir),
+        marketing.f_events_rows(spark, sf_dir),
         FACT_KEYS,
         update=True,
-        guid_col="guid_event",
-        guid_order=("event_id",),
+        key=marketing.F_EVENTS_KEY,
     )
-
-
-WAREHOUSE_TABLES = (
-    "event_raw",
-    "d_event",
-    "d_user",
-    "d_parameter",
-    "d_item",
-    "f_events",
-)
-
-# Declared warehouse contract — the reference's fixed CREATE OR REPLACE
-# TABLE schemas (`etl_s3_snowflake_d_event.py:33-42` and peers), stated
-# once here rather than re-inferred from files, so schema drift in a
-# build is an ERROR at publish time instead of a silent catalog change.
-WAREHOUSE_SCHEMAS: dict[str, str] = {
-    "event_raw": (
-        "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING,"
-        " value DOUBLE, item_key BIGINT, guid_event_raw BIGINT"
-    ),
-    "d_event": "event_id BIGINT, guid_event BIGINT",
-    "d_user": "user_id BIGINT, guid_user BIGINT",
-    "d_parameter": "parameter_name STRING, guid_parameter BIGINT",
-    "d_item": (
-        "item_id BIGINT, item_name STRING, item_brand STRING,"
-        " item_type STRING, item_size INT, item_price DOUBLE"
-    ),
-    "f_events": (
-        "event_id BIGINT, event_time TIMESTAMP, event_user_id BIGINT,"
-        " event_name STRING, event_value DOUBLE,"
-        " event_parameter_value BIGINT, guid_event BIGINT"
-    ),
-}
 
 
 def publish_catalog(
@@ -297,14 +329,12 @@ def publish_catalog(
     :data:`WAREHOUSE_SCHEMAS`, so a build that drifts from the contract
     fails loudly here instead of poisoning every downstream query.
     """
-    from pyspark.sql.types import StructType  # noqa: PLC0415
-
     from ..sources.writers import create_table_ddl  # noqa: PLC0415
 
     for name in tables:
         declared = StructType.fromDDL(WAREHOUSE_SCHEMAS[name])
         tdir = _table_dir(warehouse_dir, name)
-        actual = _read_tbl(spark, tdir).schema
+        actual = _file_schema(spark, tdir)
         if actual != declared:
             raise ValueError(
                 f"schema drift in warehouse table {name!r}: declared "
@@ -410,10 +440,14 @@ def export_bi(
     (Power BI folder source, Tableau, a plain spreadsheet) can ingest
     without a Spark connection.
 
-    Every KPI result is bounded (rows ≤ #periods or ≤ top-k items, by
-    construction — never raw-event cardinality), so the single-file
-    ``coalesce(1)`` CSV is safe at any input scale; the heavy lifting
-    stayed in the distributed plan that materialized the view.
+    Each CSV is one ``coalesce(1)`` task, so its size is the view's
+    row count. Most views are bounded by construction (one row per
+    period, or the top-k items of the latest period), but
+    ``item_view_rank_by_period`` has one row per (period, item), which
+    grows with periods × viewed items (10,820 rows for 200K events
+    over 30 days and 2,200 items) — the one view whose single-task
+    write grows with the warehouse. Row counts are observed on the write itself
+    (``Observation``), not by reading the CSV back.
     Returns the manifest's view map.
     """
     import json  # noqa: PLC0415
@@ -422,13 +456,14 @@ def export_bi(
     views: dict[str, dict] = {}
     for view_name in marketing.WAREHOUSE_KPI_SQL:
         df = spark.table(view_name)
-        out = _table_dir(export_dir, view_name)
+        written = Observation()
         (
-            df.coalesce(1)
+            df.observe(written, F.count(F.lit(1)).alias("rows"))
+            .coalesce(1)
             .write.mode("overwrite")
             .option("header", True)
             .option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
-            .csv(out)
+            .csv(_table_dir(export_dir, view_name))
         )
         views[view_name] = {
             "path": view_name,
@@ -442,7 +477,7 @@ def export_bi(
                 }
                 for f in df.schema.fields
             ],
-            "rows": spark.read.option("header", True).csv(out).count(),
+            "rows": written.get["rows"],
         }
     manifest = {"contract": "bi_export/v1", "views": views}
     with open(os.path.join(export_dir, "manifest.json"), "w") as fh:

@@ -369,3 +369,98 @@ def test_publish_catalog_analyze_records_cbo_stats(spark, warehouse):
     desc = spark.sql("DESCRIBE TABLE EXTENDED wh_f_events").collect()
     stats = [r for r in desc if r["col_name"] == "Statistics"]
     assert stats and "rows" in stats[0]["data_type"]
+
+
+def _land_day2(spark, tmp_path) -> str:
+    """A day-2 source: one changed existing event (same fact key, new
+    value) and one brand-new event by a new user, plus the unchanged
+    item table."""
+    import os
+    import shutil
+
+    events = load_table(spark, SF, "events")
+    changed = (
+        events.orderBy("event_id").limit(1).withColumn("value", F.col("value") + 1000.0)
+    )
+    max_id, max_user = events.agg(F.max("event_id"), F.max("user_id")).first()
+    new = changed.withColumn("event_id", F.lit(max_id + 1)).withColumn(
+        "user_id", F.lit(max_user + 1)
+    )
+    day2 = str(tmp_path / "day2")
+    os.makedirs(day2)
+    changed.unionByName(new).write.parquet(f"{day2}/events.parquet")
+    shutil.copy(f"{SF}/part.parquet", f"{day2}/part.parquet")
+    return day2
+
+
+# Spark jobs of each guid-merge stage in one incremental cycle at
+# sf0.001, as measured; they ran 13-18 jobs each while the merge still
+# numbered the whole delta only to drop those keys and renumber.
+GUID_MERGE_JOB_BUDGET = {"d_event": 12, "d_parameter": 8, "d_user": 12, "f_events": 13}
+
+
+def test_incremental_cycle_job_budget(spark, tmp_path, count_jobs, monkeypatch):
+    """Plan quality of one incremental daily cycle, in Spark jobs: the
+    KPI view stage reads warehouse tables with their declared schema
+    (no footer-inference job), the BI export counts rows on the write
+    (no CSV read back), and each guid merge numbers only its new rows."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    wh = str(tmp_path / "wh")
+    for stage in pipeline.PIPELINE_STAGES:
+        pipeline.run_stage(spark, SF, wh, stage)
+    pipeline.publish_catalog(spark, wh)
+    day2 = _land_day2(spark, tmp_path)
+
+    jobs = {}
+    for stage in pipeline.PIPELINE_STAGES:
+        with count_jobs() as n:
+            pipeline.run_stage(spark, day2, wh, stage)
+        jobs[stage] = n.n
+    pipeline.publish_catalog(spark, wh)
+    csv_reads = []
+    real_csv = DataFrameReader.csv
+    monkeypatch.setattr(
+        DataFrameReader,
+        "csv",
+        lambda self, *a, **k: csv_reads.append(a) or real_csv(self, *a, **k),
+    )
+    with count_jobs() as n:
+        views = pipeline.export_bi(spark, wh)
+    jobs["export_bi"] = n.n
+
+    assert jobs["aggregated_views"] == 0
+    assert csv_reads == []
+    for stage, budget in GUID_MERGE_JOB_BUDGET.items():
+        assert jobs[stage] <= budget, (stage, jobs)
+    # the observed counts are the views' row counts
+    for view_name, meta in views.items():
+        assert meta["rows"] == spark.table(view_name).count(), view_name
+
+
+@pytest.mark.parametrize("stage", ["d_event", "f_events"])
+def test_write_rejects_build_that_drifts_from_declared_schema(
+    spark, tmp_path, monkeypatch, stage
+):
+    """A build whose schema differs from WAREHOUSE_SCHEMAS fails at
+    write time, naming the table, before any file is written — reads
+    of a declared table trust the declaration, so a drifted file must
+    never land."""
+    import os
+
+    from etl_s3_airflow_snowflake_powerbi_marketing_data_spark.plans import (
+        marketing,
+    )
+
+    rows_fn = getattr(marketing, f"{stage}_rows")
+    monkeypatch.setattr(
+        marketing,
+        f"{stage}_rows",
+        lambda spark, sf_dir: rows_fn(spark, sf_dir).withColumn(
+            "event_id", F.col("event_id").cast("string")
+        ),
+    )
+    wh = tmp_path / "wh"
+    with pytest.raises(ValueError, match=f"schema drift in warehouse table '{stage}'"):
+        pipeline.run_stage(spark, SF, str(wh), stage)
+    assert os.listdir(wh) == []

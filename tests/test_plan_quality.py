@@ -411,3 +411,48 @@ def test_doc_term_family_single_tokenize_checkpoint(spark):
         # the explode chain lives inside the checkpoint; its presence
         # downstream would mean a second tokenize of the corpus
         assert "Generate explode" not in plan, name
+
+
+def test_hits_runs_one_action_per_round(spark, count_jobs, monkeypatch):
+    """HITS (`graph.hits`) runs one action per round: hub's eager
+    checkpoint. auth is pinned lazily; under AQE that pin still runs
+    auth's shuffle and broadcast stages when it is planned, and hub's
+    checkpoint then computes auth's blocks once for both readers. Every
+    round must add the same number of jobs, and all of them inside the
+    round's two checkpoint calls — a reorder that materializes auth in
+    its own action (an eager auth checkpoint, a count, a collect) adds
+    an eager call or jobs outside them."""
+    from etl_s3_airflow_snowflake_powerbi_marketing_data_spark.operators import (
+        graph,
+    )
+
+    edges = spark.createDataFrame(
+        [(1, 2), (1, 3), (2, 3), (3, 1), (4, 3), (4, 1), (2, 4)],
+        "src long, dst long",
+    )
+    frame_cls = type(edges)
+    real_checkpoint = frame_cls.localCheckpoint
+    calls: list[tuple[bool, int]] = []
+
+    def counted_checkpoint(self, eager=True, *args, **kwargs):
+        with count_jobs() as jobs:
+            out = real_checkpoint(self, eager, *args, **kwargs)
+        calls.append((eager, jobs.n))
+        return out
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", counted_checkpoint)
+
+    runs = {}
+    for iters in (1, 2, 3):
+        calls.clear()
+        with count_jobs() as outside:
+            graph.hits(edges, iters=iters)
+        runs[iters] = (outside.n + sum(n for _, n in calls), list(calls))
+
+    setup = len(runs[1][1]) - 2
+    for iters, (_, iters_calls) in runs.items():
+        # per round: auth's lazy pin, then hub's eager checkpoint
+        assert [eager for eager, _ in iters_calls[setup:]] == [False, True] * iters
+    per_round = [runs[k + 1][0] - runs[k][0] for k in (1, 2)]
+    last_round = sum(n for _, n in runs[3][1][-2:])
+    assert per_round == [last_round, last_round], runs
